@@ -169,6 +169,12 @@ def _baseline_path(sf, cpus: int = 32) -> str:
     return os.path.join(here, f"BENCH_BASELINE_sf{sf}{suffix}.json")
 
 
+def _sidecar_path() -> str:
+    """Where `main` writes its full result JSON (next to bench.py)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    return os.path.join(here, "BENCH_LAST_RUN.json")
+
+
 def _timings_from_driver_artifact(path: str, sf, cpus: int = 32) -> dict:
     """Recover per-query walls from a driver BENCH_r{N}.json. The driver
     stores only a 2000-char stdout TAIL, which truncates the queries dict
@@ -469,7 +475,7 @@ def bench_streaming_presence(spark, sf_dir: str, micro_batches: int | None = Non
 
         # sharded state keying: per-(topic,key) keying costs one Python state-
         # fn invocation per row (~10x the rest of the pipeline at user-keyed
-        # cardinality); sharding bounds invocations at |topics| x 32 per batch
+        # cardinality); sharding bounds invocations at 32 per batch
         from realtime_spark.streaming.presence import presence_diffs_sharded
 
         stream = (
@@ -960,8 +966,7 @@ def main() -> None:
     # one-line JSON past recovery and cost that round its entire
     # round-over-round table — the sidecar file cannot be truncated
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_LAST_RUN.json"), "w") as f:
+        with open(_sidecar_path(), "w") as f:
             json.dump(result, f)
     except OSError:
         pass  # read-only checkout: stdout still carries the line

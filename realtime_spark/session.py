@@ -3,6 +3,13 @@
 local[N] single-JVM for tests; the configs below are the ones that matter at
 cluster scale too (AQE, shuffle partitions, Arrow for the Pandas-UDF paths,
 UTC session timezone so results hash-match the duckdb oracle).
+
+Python workers start from `realtime_spark.worker_daemon` (pyspark's daemon
+without the per-task re-read of every zip archive on the worker path), with
+the package root on the executors' PYTHONPATH so that module and UDFs
+pickled by reference import from any working directory. The driver heap
+defaults to 48g or 3/8 of the host's memory, whichever is smaller;
+SPARK_DRIVER_MEMORY overrides it.
 """
 
 from __future__ import annotations
@@ -12,6 +19,20 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# the directory holding the realtime_spark package
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """48g, bounded by 3/8 of MemTotal: a 48g heap on a 16 GB host grows
+    past physical memory under the oracle matrix and gets OOM-killed."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, kb * 3 // 8 // 1024))}m"
 
 
 def get_spark(app_name: str = "realtime_spark", cpus: int | None = None) -> SparkSession:
@@ -32,7 +53,10 @@ def get_spark(app_name: str = "realtime_spark", cpus: int | None = None) -> Spar
         # pipeline onto one core; scale-neutral (no-op when files >> cores)
         .config("spark.sql.files.minPartitionNum", str(cpus))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
+        .config("spark.python.daemon.module", "realtime_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

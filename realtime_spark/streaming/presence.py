@@ -9,10 +9,15 @@ Reference semantics (ST4/A8):
     (reference: presence_handler.ex:193-200, channels/presence.ex:1-12)
 
 The reference replicates state via an ORSWOT CRDT (Phoenix.Tracker). In
-Spark, Structured Streaming's state store *is* the replicated state: keyed
-`applyInPandasWithState` over (topic, presence_key) holds the latest meta and
-emits a diff row on every effective change. Partitioning by the group key
-gives the same per-key linearization the tracker's per-topic shard does.
+Spark, Structured Streaming's state store *is* the replicated state:
+`applyInPandasWithState` holds the latest meta per (topic, presence_key) and
+emits a diff row on every effective change. Two keyings:
+  - `presence_diffs_stateful`: one state row per (topic, presence_key);
+  - `presence_diffs_sharded` (the one streams use): one state row per shard
+    of a fixed pool, shard = hash(topic, presence_key) % n_shards, holding
+    {topic: {presence_key: meta}} -- the tracker's bounded shard pool.
+Both give per-key linearization: a key's events meet in one group and are
+applied in (ts, seq) order.
 
 Batch analogs (oracle-checkable) live beside the stateful operator:
 `presence_diffs_batch` computes the same diffs from an ordered event log with
@@ -109,27 +114,32 @@ def presence_diffs_stateful(events: DataFrame) -> DataFrame:
 
 def presence_diffs_sharded(events: DataFrame, n_shards: int = 32) -> DataFrame:
     """Scale-shaped variant of `presence_diffs_stateful`: state is keyed by
-    (topic, shard) where shard = hash(presence_key) % n_shards, and each state
-    row holds the shard's presence_key -> meta map (JSON).
+    shard alone, shard = pmod(xxhash64(topic, presence_key), n_shards), and
+    each state row holds the shard's members as JSON
+    {topic: {presence_key: meta}}.
 
     Rationale: with per-user presence keys, (topic, presence_key) keying makes
     applyInPandasWithState invoke the Python state fn ~once per ROW per
-    micro-batch — pure per-group overhead dominates (measured ~10x the whole
-    pipeline). Sharding caps invocations at |topics| x n_shards per batch
-    while preserving per-key linearization (all events of a key hash to the
-    same shard, processed in (ts, seq) order). This mirrors the reference's
-    Phoenix.Tracker design of hashing topics across a bounded shard pool
-    (deps phoenix_pubsub; lib/realtime_web/channels/presence.ex:8-11) rather
-    than one process per key. Hot topics with millions of keys spread over
-    n_shards, and each state row stays O(keys/shard).
+    micro-batch, and every invocation pays a fixed pandas/Arrow cost (~3 ms)
+    in the serializer. Keying by shard alone caps invocations at n_shards
+    per batch whatever the number of topics. Per-key linearization holds:
+    all events of a (topic, presence_key) hash to the same shard and are
+    processed in (ts, seq) order. This mirrors the reference's
+    Phoenix.Tracker design of hashing across a bounded shard pool (deps
+    phoenix_pubsub; lib/realtime_web/channels/presence.ex:8-11) rather than
+    one process per key; each state row stays O(members/n_shards).
+
+    n_shards is part of the state layout: a restart must use the value the
+    checkpoint was written with. Checkpoints keyed by (topic, _shard) fail
+    Spark's state-schema check on restart. topic and presence_key become
+    JSON object keys, so both must be non-null.
     """
     import json
 
     def fn(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        (topic, _shard) = key
-        current: dict[str, str] = (
+        current: dict[str, dict[str, str]] = (
             json.loads(state.get[0]) if state.exists else {}
         )
         rows: list[tuple[Any, ...]] = []
@@ -139,26 +149,27 @@ def presence_diffs_sharded(events: DataFrame, n_shards: int = 32) -> DataFrame:
             sort_keys = ["ts", "seq"] if "seq" in merged.columns else ["ts"]
             if len(merged) > 1:
                 merged = merged.sort_values(sort_keys, kind="mergesort")
-            pkeys = merged["presence_key"].to_numpy()
-            actions = merged["action"].to_numpy()
-            metas = merged["meta"].to_numpy()
-            tss = merged["ts"].to_numpy()
-            for pkey, action, meta, ts in zip(pkeys, actions, metas, tss):
+            for topic, pkey, action, meta, ts in zip(
+                merged["topic"].to_numpy(),
+                merged["presence_key"].to_numpy(),
+                merged["action"].to_numpy(),
+                merged["meta"].to_numpy(),
+                merged["ts"].to_numpy(),
+            ):
+                members = current.setdefault(topic, {})
                 # membership = key IN the map (a stored null meta is still
                 # present); .get()-is-None would leak null-meta entries
                 # forever and re-join on every track
-                in_map = pkey in current
-                cur = current.get(pkey)
                 if action == "track":
-                    if not in_map:
-                        current[pkey] = meta
+                    if pkey not in members:
+                        members[pkey] = meta
                         rows.append((topic, pkey, "join", meta, ts))
-                    elif cur != meta:
-                        current[pkey] = meta
+                    elif members[pkey] != meta:
+                        members[pkey] = meta
                         rows.append((topic, pkey, "update", meta, ts))
-                elif action == "untrack" and in_map:
-                    rows.append((topic, pkey, "leave", cur, ts))
-                    del current[pkey]
+                elif action == "untrack" and pkey in members:
+                    rows.append((topic, pkey, "leave", members.pop(pkey), ts))
+            current = {t: m for t, m in current.items() if m}
         if current:
             state.update((json.dumps(current),))
         else:
@@ -169,9 +180,9 @@ def presence_diffs_sharded(events: DataFrame, n_shards: int = 32) -> DataFrame:
             )
 
     sharded = events.withColumn(
-        "_shard", F.pmod(F.xxhash64("presence_key"), F.lit(n_shards))
+        "_shard", F.pmod(F.xxhash64("topic", "presence_key"), F.lit(n_shards))
     )
-    return sharded.groupBy("topic", "_shard").applyInPandasWithState(
+    return sharded.groupBy("_shard").applyInPandasWithState(
         fn,
         outputStructType=DIFF_SCHEMA_DDL,
         stateStructType="state_json string",
@@ -226,7 +237,8 @@ def presence_state_batch(events: DataFrame) -> DataFrame:
 
 def presence_diffs_tws(events: DataFrame, n_shards: int = 32) -> DataFrame:
     """Presence diffs on the transformWithStateInPandas API (Spark 4):
-    state keyed by (topic, shard) with a MapState of presence_key -> meta.
+    state keyed by (topic, shard), shard = hash(presence_key) % n_shards,
+    with a MapState of presence_key -> meta.
 
     Requires google.protobuf at runtime (the TWS state-server protocol);
     deployments without it use `presence_diffs_sharded`, which is
@@ -235,10 +247,12 @@ def presence_diffs_tws(events: DataFrame, n_shards: int = 32) -> DataFrame:
     Versus the sharded applyInPandasWithState form, MapState is the better
     100 TB shape: each present member is an individual RocksDB entry, so a
     micro-batch reads/writes ONLY the keys it touches — the JSON-blob state
-    row of `presence_diffs_sharded` rewrites the whole shard map every
-    batch (O(members/shard) I/O per batch regardless of activity). Same
-    linearization guarantee: a key's events all hash to one shard and are
-    processed in (ts, seq) order.
+    row of `presence_diffs_sharded` ({topic: {presence_key: meta}} per
+    shard) rewrites the whole shard every batch it touches
+    (O(members/n_shards) I/O regardless of activity). The price is more
+    groups: up to |topics| x n_shards state-fn calls per batch here against
+    n_shards there. Same linearization guarantee: a key's events all hash
+    to one group and are processed in (ts, seq) order.
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

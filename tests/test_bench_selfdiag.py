@@ -21,6 +21,14 @@ import pytest
 import bench
 
 
+@pytest.fixture(autouse=True)
+def _sidecar_in_tmp(tmp_path, monkeypatch):
+    """bench.main() writes its sidecar into tmp_path, not the checkout."""
+    monkeypatch.setattr(
+        bench, "_sidecar_path", lambda: str(tmp_path / "BENCH_LAST_RUN.json")
+    )
+
+
 # ---------------------------------------------------------------------------
 # prior-round recovery
 # ---------------------------------------------------------------------------
@@ -250,7 +258,8 @@ def test_sidecar_result_written(spark, monkeypatch, tmp_path, capsys):
     result, _ = _run_main_headline_only(
         monkeypatch, tmp_path, capsys, queries=["replay_topk"], seed=None
     )
-    side = os.path.join(os.path.dirname(bench.__file__), "BENCH_LAST_RUN.json")
+    side = bench._sidecar_path()
+    assert side.startswith(str(tmp_path))
     assert os.path.exists(side)
     with open(side) as f:
         sidecar = json.load(f)

@@ -153,6 +153,91 @@ def test_presence_diffs_sharded_multi_batch(spark):
         assert got == expected
 
 
+def test_presence_diffs_sharded_restart_across_topics(spark, tmp_path):
+    """Four topics over three micro-batches, with a stop and a restart on
+    the same checkpoint before the third: the restarted query reads the
+    members back from the shard state, so re-tracks with unchanged meta emit
+    nothing and untracks leave with the stored meta. The emitted multiset,
+    ts included, equals the batch analog on the full log, and the state
+    holds at most one row per shard whatever the number of topics."""
+    from collections import Counter
+
+    n_shards = 4
+    schema = "topic string, presence_key string, action string, meta string, ts timestamp"
+    rows = [
+        (f"room{i % 4}", f"u{i % 13}", "track" if i % 5 else "untrack",
+         f"m{i % 7}", float(i))
+        for i in range(240)
+    ]
+    # batch 3: every member present after batch 2 re-tracked unchanged,
+    # then every third one untracked and every fifth one changed
+    members: dict[tuple, str] = {}
+    for topic, key, action, meta, _ in rows:
+        if action == "track":
+            members[(topic, key)] = meta
+        else:
+            members.pop((topic, key), None)
+    sec = 240.0
+    for j, ((topic, key), meta) in enumerate(sorted(members.items())):
+        rows.append((topic, key, "track", meta, sec))
+        sec += 1
+        if j % 3 == 0:
+            rows.append((topic, key, "untrack", None, sec))
+            sec += 1
+        elif j % 5 == 0:
+            rows.append((topic, key, "track", meta + "x", sec))
+            sec += 1
+    df = spark.createDataFrame(
+        rows,
+        "topic string, presence_key string, action string, meta string, sec double",
+    ).withColumn("ts", F.col("sec").cast("timestamp")).drop("sec")
+
+    def multiset(d):
+        return Counter(
+            (r["topic"], r["presence_key"], r["kind"], r["meta"], r["ts"])
+            for r in d.collect()
+        )
+
+    expected = multiset(presence_diffs_batch(df))
+    src, out, ckpt = (str(tmp_path / n) for n in ("src", "out", "ckpt"))
+    bounds = [(0, 120), (120, 240), (240, sec)]
+    state_rows = []
+
+    def run(parts):
+        for k in parts:
+            lo, hi = bounds[k]
+            sec_col = F.col("ts").cast("double")
+            df.filter((sec_col >= lo) & (sec_col < hi)).coalesce(1).write.parquet(
+                f"{src}/{k}"
+            )
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src + "/*")
+        )
+        q = (
+            presence_diffs_sharded(stream, n_shards=n_shards)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+        state_rows.extend(
+            p["stateOperators"][0]["numRowsTotal"]
+            for p in q.recentProgress
+            if p["numInputRows"]
+        )
+
+    run([0, 1])
+    run([2])
+    assert len(state_rows) == 3  # one batch per file, the third after restart
+    assert 0 < max(state_rows) <= n_shards
+    assert multiset(spark.read.parquet(out)) == expected
+
+
 def test_cdc_stream_foreachbatch(spark, sf_dir):
     """Phase 4: the batch CDC pipeline lifted over a streaming source produces
     the same matches as the batch run."""
